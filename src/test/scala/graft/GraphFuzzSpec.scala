@@ -198,7 +198,7 @@ class GraphFuzzSpec extends SparkSpec {
   test("fuzz: SCC matches brute-force mutual reachability") {
     for (i <- indicesFor(0)) {
       val seed = baseSeed + i
-      // SCC's color fixpoint walks a cycle's full circumference per
+      // SCC's label fixpoint walks a cycle's full circumference per
       // outer round — cap n to keep the deep-cycle cases fast
       val (n, edges) = gen(seed, maxN = 16)
       val c = ctx("scc", i, seed, n, edges.size)

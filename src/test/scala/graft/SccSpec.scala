@@ -9,13 +9,14 @@ import org.apache.spark.sql.functions._
 class SccSpec extends SparkSpec {
 
   /** Run graft SCC on an edge list over vertices 0..n-1. */
-  private def runScc(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+  private def runScc(n: Int, edges: Seq[(Long, Long)],
+                     maxOuterIter: Int = 50): Map[Long, Long] = {
     val s = spark
     import s.implicits._
     val v = (0L until n.toLong).toDF("v")
     val e = if (edges.isEmpty) Seq((-1L, -1L)).toDF("src", "dst").limit(0)
             else edges.toDF("src", "dst")
-    Graph.scc(s, v, e).collect()
+    Graph.scc(s, v, e, maxOuterIter).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -65,6 +66,48 @@ class SccSpec extends SparkSpec {
       val want = bruteScc(n, edges)
       assert(got == want, s"trial $trial: n=$n edges=$edges")
     }
+  }
+
+  test("a self-loop is neither an in- nor an out-edge for trim") {
+    // 0 has only a self-loop; 1 has a self-loop and a 2-cycle with 2
+    val edges = Seq((0L, 0L), (1L, 1L), (1L, 2L), (2L, 1L), (3L, 3L),
+      (3L, 1L))
+    val got = runScc(4, edges)
+    assert(got == bruteScc(4, edges))
+    assert(got == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 3L))
+  }
+
+  test("two cycles joined one-way need a second outer iteration") {
+    // upstream cycle 0-1-2 feeds downstream cycle 3-4-5 through 2→3;
+    // the largest id sits downstream, so the first label pass leaves
+    // the upstream cycle with f != b
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L),
+      (3L, 4L), (4L, 5L), (5L, 3L))
+    val got = runScc(6, edges)
+    assert(got == bruteScc(6, edges))
+    assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L,
+      3L -> 3L, 4L -> 3L, 5L -> 3L))
+    // capped at one iteration, the unresolved upstream cycle falls back
+    // to singletons
+    assert(runScc(6, edges, maxOuterIter = 1) == Map(0L -> 0L, 1L -> 1L,
+      2L -> 2L, 3L -> 3L, 4L -> 3L, 5L -> 3L))
+  }
+
+  test("a 12-cycle survives trim and resolves as one component") {
+    val edges = (0L until 12L).map(i => (i, (i + 5) % 12)) :+ ((3L, 12L))
+    val got = runScc(13, edges)
+    assert(got == bruteScc(13, edges))
+    assert(got == ((0L until 12L).map(_ -> 0L) :+ (12L -> 12L)).toMap)
+  }
+
+  test("edges with an endpoint outside the vertex set are ignored") {
+    // 7 and 9 are not vertices: the cycle through 7 and the edges to
+    // and from 9 must not merge 0, 1 and 2
+    val edges = Seq((0L, 1L), (1L, 7L), (7L, 0L), (1L, 2L), (2L, 9L),
+      (9L, 1L), (3L, 4L), (4L, 3L))
+    val got = runScc(5, edges)
+    assert(got == bruteScc(5, edges.filter { case (a, b) => a < 5 && b < 5 }))
+    assert(got == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 3L))
   }
 
   test("BFS: path, branch, cycle, and unreachable node distances") {
